@@ -392,7 +392,8 @@ def wordpiece_learn(df: DataFrame, n_merges: int = 16,
             # vocab passes. Counts, score arithmetic (one IEEE divide of
             # one IEEE product), and the (score desc, l, r) argmax are
             # unchanged — the merge table is byte-identical (pinned by
-            # tests/test_r15_optimizations.py against the unfused form).
+            # tests/test_wordpiece_bpe_ppjoin_exact.py against the unfused
+            # form).
             counts = (vocab.select("cnt", grain_explode)
                       .groupBy("p.l", "p.r")
                       .agg(F.sum("cnt").alias("c"))

@@ -425,12 +425,12 @@ def bigram_lm_nll(df, text_col: str = "text", id_col: str = "doc_id",
 
     NO small-corpus fan-out here (round 12, VERDICT r11 #2): the round-11
     `fan_out_small_scan` call was A/B-measured and REVERTED — interleaved
-    min-of-3 in one warm JVM at sf0.1 (tools/bigram_fanout_ab.py, two
-    independent sessions agreeing) showed the fan-out costing +14%
-    (q146), +47%/+51% (q157) and +27% (q182): unlike bm25_topk, the
-    explode here feeds a map-side-combined token agg whose downstream
-    stages already parallelize, so the extra raw-text shuffle buys no
-    serial-stage relief and q157 pays it twice (two corpora). The
+    min-of-3 in one warm JVM at sf0.1 (two independent sessions agreeing)
+    showed the fan-out costing +14% (q146), +47%/+51% (q157) and +27%
+    (q182): unlike bm25_topk, the explode here feeds a map-side-combined
+    token agg whose downstream stages already parallelize, so the extra
+    raw-text shuffle buys no serial-stage relief and q157 pays it twice
+    (two corpora). The
     SCALE.md A/B table is the record; bm25_topk and the shingle
     operators keep their fan-outs (measured wins, r10)."""
     def _bigrams(frame):

@@ -1,18 +1,25 @@
 """Named query registry — the driver contract surface.
 
-Every implemented operator from SURVEY.md §2 gets a named query here: a Spark
-builder ``(spark, sf_dir) -> DataFrame`` composed from the engine's operator
-library, plus (where SQL-expressible) a DuckDB oracle twin with IDENTICAL
-output column names. Computed columns are aliased on both sides; money/qty
-aggregates go through exact DECIMAL sums (see ``operators.aggregates``) so the
-value-hash comparison is engine-independent.
+``REGISTRY`` is the one table of queries, filled in registration order by
+the ``@_register`` decorator (a duplicate name raises ``ValueError``).
+Each entry pairs a Spark builder ``(spark, sf_dir) -> DataFrame`` composed
+from the engine's operator library with, where SQL-expressible, a DuckDB
+oracle twin with IDENTICAL output column names. Computed columns are
+aliased on both sides; money/qty aggregates go through exact DECIMAL sums
+(see ``operators.aggregates``) so the value-hash comparison is
+engine-independent. A query without an oracle carries a one-line proof
+in ``_ROWS_ONLY_PROOFS`` of why no SQL twin can exist.
+
+Consumers that need a stable order sort ``REGISTRY`` by name; importing
+this module only registers builders — it reads no files and runs no
+Spark job.
 
 Determinism rule: any query with a LIMIT/top-k carries a total-order tiebreak;
 any grouped list is order-embedded (``sort_array``); floats are rounded after
 exact arithmetic.
 
-Build-time contract (ADVICE r13, documented): builders are plan constructors
-— calling one normally runs NO Spark job — with one narrow exception, the
+Build-time contract: builders are plan constructors — calling one
+normally runs NO Spark job — with one narrow exception, the
 driver-metadata-probe class: a builder may run a bounded metadata-scale
 action (a 1-row bounds ``first()``, a partition-offset read) when the PLAN
 itself depends on the value (q226's grid size; ``ranks.py`` offsets;
@@ -48,37 +55,12 @@ class Query:
 
 REGISTRY: dict[str, Query] = {}
 
-#: Retired-to-parity tier (COVERAGE.md growth-policy rule 3, scaffolded
-#: round 12 ahead of the 245-entry ceiling): when the registry would
-#: exceed the ceiling, an overlapping one-liner moves HERE verbatim —
-#: out of ``REGISTRY`` (no driver rotation slot), but
-#: ``tests/test_oracle_parity.py`` parametrizes over
-#: ``REGISTRY ∪ RETIRED_PARITY``, so its value parity vs DuckDB keeps
-#: running EVERY session at sf0.01. Coverage proofs never lapse; only
-#: driver slots are reclaimed. Rule 3 ENGAGED round 14: the first seven
-#: of the COVERAGE.md named batch (q68/q77/q86/q69/q70/q79/q76) retired
-#: via ``@_register_retired`` so the r14 wave fits under the 245
-#: ceiling (240 − 7 + 10 = 243); their COVERAGE rows repoint to the
-#: surviving driver-certified supersets. Remaining named batch
-#: (q75/q65/q88) stays registered until the ceiling forces more.
-RETIRED_PARITY: dict[str, Query] = {}
-
 
 def _register(name: str, survey: str, oracle: str | None):
     def deco(fn):
+        if name in REGISTRY:
+            raise ValueError(f"query {name!r} is already registered")
         REGISTRY[name] = Query(name, fn, oracle, survey)
-        return fn
-    return deco
-
-
-def _register_retired(name: str, survey: str, oracle: str):
-    """Rule-3 retirement: identical to ``_register`` but the query lands
-    in ``RETIRED_PARITY`` — still parity-tested every session, no longer
-    in the driver window. Retired queries must keep an oracle (a
-    rows-only query can never retire: its pins are its only value
-    evidence — COVERAGE.md retirement order, 'never' list)."""
-    def deco(fn):
-        RETIRED_PARITY[name] = Query(name, fn, oracle, survey)
         return fn
     return deco
 
@@ -1737,7 +1719,7 @@ def q67_distribution_ranks(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.round("cume_dist", 6).alias("cum_dist"))
 
 
-@_register_retired(
+@_register(
     "q68_exists_counts",
     survey="net-new EXISTS/NOT EXISTS (semi/anti-join rewrite; J4/J5 generalized)",
     oracle="""
@@ -1763,7 +1745,7 @@ def q68_exists_counts(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.when(F.col("_has").isNull(), 1)).alias("n_without_orders"))
 
 
-@_register_retired(
+@_register(
     "q69_above_brand_avg",
     survey="net-new correlated-scalar-subquery shape (price above brand average)",
     oracle="""
@@ -1796,7 +1778,7 @@ def q69_above_brand_avg(spark: SparkSession, sf_dir: str) -> DataFrame:
                     F.round("_avg", 2).alias("brand_avg")))
 
 
-@_register_retired(
+@_register(
     "q70_stats_suite",
     survey="net-new statistical aggregates (corr / covar_samp / stddev / variance)",
     oracle="""
@@ -1949,7 +1931,7 @@ def q75_string_suite(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.length(F.replace(F.col("text"), F.lit(" "), F.lit(""))).alias("n_nonspace_chars"))
 
 
-@_register_retired(
+@_register(
     "q76_date_math",
     survey="net-new date/time arithmetic (SURVEY §2.8 note: net-new surface over events/orders ts)",
     oracle="""
@@ -1979,7 +1961,7 @@ def q76_date_math(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.year(d).alias("yr"), F.quarter(d).alias("qtr"), F.month(d).alias("mon"))
 
 
-@_register_retired(
+@_register(
     "q77_distinct_aggs",
     survey="net-new distinct-inside-aggregate (SURVEY §2.4 'not present' gap closed)",
     oracle="""
@@ -2027,7 +2009,7 @@ def q78_string_agg_regions(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.concat_ws(",", F.sort_array(F.collect_list("n_name"))).alias("nations"))
 
 
-@_register_retired(
+@_register(
     "q79_bool_bit_aggs",
     survey="net-new boolean/bitwise aggregates (bool_and/bool_or/bit_and/bit_or/bit_xor)",
     oracle="""
@@ -2275,7 +2257,7 @@ def q85_label_centroids(spark: SparkSession, sf_dir: str) -> DataFrame:
         F.count(F.lit(1)).alias("n_vectors"))
 
 
-@_register_retired(
+@_register(
     "q86_multiset_ops",
     survey="net-new EXCEPT ALL / INTERSECT ALL (multiset semantics; U2 generalized)",
     oracle="""
@@ -8661,8 +8643,7 @@ def q208_source_overlap_matrix(spark: SparkSession, sf_dir: str) -> DataFrame:
 
 # =====================================================================
 # Round-11 wave: pipeline observability, privacy/robustness audits,
-# streaming rollups (q209-q219; COVERAGE.md growth-policy rule 2 —
-# deferred to the r12 window, tri-SF parity + exact audit locally)
+# streaming rollups (q209-q219)
 # =====================================================================
 
 @_register(
@@ -9364,9 +9345,7 @@ def q219_stream_lag_enrich(spark: SparkSession, sf_dir: str) -> DataFrame:
 # =====================================================================
 # Round-12 wave: event analytics (funnel / cohorts / gap-fill /
 # concurrency / paths / trends), corpus economics (vocab coverage,
-# Gini), privacy (l-diversity) and embedding compression (q220-q230;
-# COVERAGE.md growth-policy rule 2 — deferred to the r13 window,
-# tri-SF parity + exact audit locally)
+# Gini), privacy (l-diversity) and embedding compression (q220-q230)
 # =====================================================================
 
 @_register(
@@ -11842,215 +11821,680 @@ def q252_centroid_confusion(spark: SparkSession, sf_dir: str
 
 
 # =====================================================================
-# Driver correctness-window ordering
+# Relational division, concentration / distribution-shift statistics,
+# graph assortativity, change-points and cohort value curves (q253-q261).
+# Exactness conventions: money in integer cents via
+# ``CAST(x AS DECIMAL(18,2)) * 100``; cross-engine floats only as ONE
+# final IEEE divide (or divide+sqrt tree) of exact integer operands;
+# dates emitted as yyyy-MM-dd strings; oracle sums stay BIGINT/HUGEINT
+# while Spark carries DECIMAL(38) for 100 TB headroom.
 # =====================================================================
-# The driver certifies the FIRST 50 entries of ``queries()`` in dict
-# (registration) order. Rounds 1-2 certified the original first 50
-# (CORRECTNESS_r02.json keys, frozen below); round 3 rotated the 49
-# never-checked queries to the front so r02 ∪ r03 covers every entry.
-# From round 4 on, the policy is CHANGED-SINCE-CERTIFIED FIRST: queries
-# whose code (or whose operators' code) changed after their last driver
-# row lead the window — the driver always re-certifies exactly what the
-# current round touched (r3's gap: q41/q32/q53 shipped changed code but
-# kept pre-change driver rows). Remaining slots refresh the STALEST
-# certifications (r02 before r03). Relative order within each group is
-# preserved; ``queries()``/``oracle_sql()`` still expose all entries.
-#
-# ROTATION SLO (VERDICT r7 #8, recalibrated round 9): the r7 constant
-# ("no certificate older than maxRound − 3") encoded the 146-query /
-# 50-slot cadence of that round.  The registry has since grown past the
-# point where ANY composition can re-certify everything that fast —
-# 50-slot windows cannot sweep 185 queries every 3 rounds — so the bound
-# is now DERIVED from the arithmetic the rotation can actually achieve
-# (:func:`_rotation_staleness_bound`): one full stalest-first sweep at
-# steady-state refresh capacity, plus the landing round.  A static
-# constant here was the recurring post-close red-test class (VERDICT r8
-# #1): every artifact landing after close advanced maxRound and made the
-# frozen threshold unsatisfiable by construction.
-# ``test_registry_window.py::test_rotation_slo_no_stale_certificates``
-# asserts the derived bound against the artifacts, and
-# ``test_rotation_slo_survives_post_close_artifact`` replays the exact
-# failure mode (a future-round artifact certifying the current window)
-# to prove the bound stays green after close.
 
-_R02_CERTIFIED: tuple[str, ...] = (
-    "q01_top_parts", "q02_pricing_summary", "q03_scan_filter_project",
-    "q04_semi_join", "q05_anti_join", "q06_join_chain_revenue",
-    "q07_full_outer_counts", "q08_distinct_flags", "q09_count_distinct",
-    "q10_sorted_collect_list", "q11_argmax_per_order",
-    "q12_quantity_histogram", "q13_rank_suppliers", "q14_topk_per_brand",
-    "q15_global_topn_orders", "q16_union_distinct_keys", "q17_except_keys",
-    "q18_intersect_keys", "q19_scalar_string_funcs", "q20_null_sentinel",
-    "q21_daily_rollup", "q22_hourly_window", "q23_token_explode_count",
-    "q24_sessionize", "q25_nested_projection", "q26_map_aggregation",
-    "q27_rmse_native", "q28_running_total", "q29_lag_lead_delta",
-    "q42_range_join", "q49_asof_join", "q43_grouping_sets",
-    "q44_having_filter", "q45_conditional_share", "q46_json_extract",
-    "q47_pivot", "q30_dedup_exact", "q31_dedup_fingerprint",
-    "q32_ngram_jaccard_topk", "q33_lang_id", "q34_text_quality",
-    "q35_token_stats", "q37_topn_other", "q40_ann_cosine_topk",
-    "q41_cosine_neardup_pairs", "q48_merge_upsert", "q50_string_index_sql",
-    "q51_interactions_table", "q52_ranking_metrics", "q53_als_recommend",
+@_register(
+    "q253_relational_division",
+    survey="net-new relational division (universal quantification: customers whose orders span ALL order priorities — count-distinct-equals-domain rewrite of the double-NOT-EXISTS textbook form; the classic FOR-ALL surface)",
+    oracle="""
+        WITH per AS (
+          SELECT o_custkey,
+                 count(DISTINCT o_orderpriority) AS n_priorities
+          FROM orders GROUP BY 1),
+        dom AS (SELECT count(DISTINCT o_orderpriority) AS d FROM orders)
+        SELECT per.n_priorities,
+               CAST(count(*) AS BIGINT) AS n_customers,
+               (per.n_priorities = dom.d) AS spans_all
+        FROM per, dom
+        GROUP BY per.n_priorities, dom.d
+        ORDER BY per.n_priorities
+    """,
 )
+def q253_relational_division(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Relational division (universal quantification): which customers
+    ordered under EVERY priority class. The textbook double-NOT-EXISTS
+    decorrelates to ``count(distinct attr) per key == |attr domain|`` —
+    one map-side-combinable aggregate over the fact keyed by customer
+    plus a 1-row domain-count frame, instead of a per-customer
+    correlated subquery pair (the oracle keeps the domain subquery so
+    both engines derive |domain| from data, never a literal). Output
+    is the distinct-priority-count histogram with the division answer
+    as the ``spans_all`` top row. 100 TB: groupBy(o_custkey) is the
+    only row-grain shuffle (partial count-distinct map-side); the
+    domain count is a broadcast scalar frame (plan-audit SCALAR_FRAME
+    class)."""
+    cat = Catalog(spark, sf_dir)
+    per = (cat.orders.groupBy("o_custkey")
+           .agg(F.countDistinct("o_orderpriority").alias("n_priorities")))
+    dom = cat.orders.agg(
+        F.countDistinct("o_orderpriority").alias("_dom"))
+    hist = per.groupBy("n_priorities").agg(
+        F.count(F.lit(1)).alias("n_customers"))
+    return (hist.crossJoin(F.broadcast(dom))
+            .select("n_priorities", "n_customers",
+                    (F.col("n_priorities") == F.col("_dom"))
+                    .alias("spans_all"))
+            .orderBy("n_priorities"))
 
 
-#: Queries with NO driver row in any CORRECTNESS_r*.json — the very
-#: front of the window, ahead even of changed-code refreshes (VERDICT r6
-#: #1). Round 9 (VERDICT r8 #1): the tier is ARTIFACT-DERIVED at import —
-#: a query is never-certified iff no CORRECTNESS_r*.json on disk (nor the
-#: frozen _R02_CERTIFIED record) carries a row for it, so a driver
-#: artifact landing AFTER round close can no longer strand a stale static
-#: tuple (the r7/r8 recurring red-test class). The static tuple below is
-#: only the fallback for when the artifacts are unreadable, and lists the
-#: queries added this round (which by construction have no driver row
-#: yet); ``_derive_never_certified`` is the source of truth.
-_NEVER_CERTIFIED_FALLBACK: tuple[str, ...] = (
-    "q188_gopher_repetition", "q189_wordpiece_merges",
-    "q190_margin_mining", "q191_padding_waste", "q192_mmr_selection",
-    "q193_knn_label_eval", "q194_self_retrieval_eval",
-    "q195_orc_roundtrip", "q196_bigram_entropy",
-    "q197_streaming_dedup",
-    "q198_length_quality_corr",
-    "q199_doremi_reweight", "q200_filter_agreement",
-    "q201_stream_session_windows", "q202_stream_upsert_latest",
-    "q203_group_reservoir", "q204_stream_quality_gate",
-    "q205_curriculum_interleave", "q206_pareto_frontier",
-    "q207_quantile_normalize", "q208_source_overlap_matrix",
-    "q209_stream_windowed_topk", "q210_k_anonymity",
-    "q211_mad_outliers", "q212_token_mass_quantiles",
-    "q213_dedup_funnel", "q214_embedding_dispersion",
-    "q215_stream_modulo_sample", "q216_gate_ablation",
-    "q217_lang_mix_chisq", "q218_source_vocab_overlap",
-    "q219_stream_lag_enrich",
-    "q220_l_diversity", "q221_event_funnel", "q222_survival_curve",
-    "q223_embedding_quantization", "q224_vocab_coverage",
-    "q225_value_trend_slopes", "q226_gapfill_hourly",
-    "q227_session_paths", "q228_session_concurrency",
-    "q229_token_gini", "q230_stream_funnel_stages",
-    "q231_topk_recommend_twin", "q232_basket_pair_lift",
-    "q233_growth_accounting", "q234_rfm_segments",
-    "q235_referential_audit", "q236_residual_outlier_hours",
-    "q237_last_touch_attribution", "q238_interarrival_burstiness",
-    "q239_winsorized_stats", "q240_weekly_top_movers",
-    "q241_ewma_daily", "q242_time_to_convert",
-    "q243_benford_first_digit", "q244_theil_sen_trend",
-    "q245_activity_streaks", "q246_lead_time_sla",
-    "q247_aa_proportion_ztest", "q248_supplier_hhi",
-    "q249_spearman_rank_corr", "q250_join_key_skew_audit",
-    "q251_decile_lift", "q252_centroid_confusion",
+@_register(
+    "q256_weighted_quantiles",
+    survey="net-new weighted quantiles (token-WEIGHTED median/p90 of document length per source — weighted value-domain histogram + prefix sums, pure integer threshold comparisons, no float anywhere; distinct from every unweighted quantile site q212/q234/q239/q242/q246)",
+    oracle="""
+        WITH t AS (
+          SELECT source,
+                 CAST(len(string_split_regex(text, '\\s+')) AS BIGINT)
+                   AS n_tokens
+          FROM documents),
+        h AS (
+          SELECT source, n_tokens, sum(n_tokens) AS w
+          FROM t GROUP BY 1, 2),
+        c AS (
+          SELECT source, n_tokens, w,
+                 sum(w) OVER (PARTITION BY source ORDER BY n_tokens
+                              ROWS UNBOUNDED PRECEDING) AS cum,
+                 sum(w) OVER (PARTITION BY source) AS tot
+          FROM h)
+        SELECT source,
+               CAST(max(tot) AS BIGINT) AS total_tokens,
+               min(CASE WHEN 2 * cum >= tot THEN n_tokens END)
+                 AS w_median_tokens,
+               min(CASE WHEN 10 * cum >= 9 * tot THEN n_tokens END)
+                 AS w_p90_tokens
+        FROM c GROUP BY source
+        ORDER BY source
+    """,
 )
+def q256_weighted_quantiles(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Token-weighted quantiles of document length per source: "the doc
+    length below which half (90%) of the TOKENS live" — the
+    sequence-packing / context-budget planning number, where the
+    unweighted median (q212-class) answers a different question
+    ("half the DOCS"). Entirely integer: weighted value-domain
+    histogram (length -> sum of tokens), per-source prefix sums over
+    the bounded length domain, and the quantile is the smallest length
+    whose doubled (10×) cumulative weight clears the total (9× total)
+    — threshold comparisons in exact BIGINT, no division, no floats,
+    so the oracle match is definitionally bit-exact. 100 TB: one
+    map-side-combined histogram aggregate; the window runs over the
+    per-source LENGTH DOMAIN (value-bounded), never over documents."""
+    cat = Catalog(spark, sf_dir)
+    t = cat.documents.select(
+        "source",
+        F.size(F.split(F.col("text"), r"\s+")).cast("bigint")
+        .alias("n_tokens"))
+    h = t.groupBy("source", "n_tokens").agg(
+        F.sum("n_tokens").alias("w"))
+    wc = (Window.partitionBy("source").orderBy("n_tokens")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    wt = Window.partitionBy("source")
+    c = (h.withColumn("cum", F.sum("w").over(wc))
+         .withColumn("tot", F.sum("w").over(wt)))
+    return (c.groupBy("source")
+            .agg(F.max("tot").alias("total_tokens"),
+                 F.min(F.when(2 * F.col("cum") >= F.col("tot"),
+                              F.col("n_tokens"))).alias("w_median_tokens"),
+                 F.min(F.when(10 * F.col("cum") >= 9 * F.col("tot"),
+                              F.col("n_tokens"))).alias("w_p90_tokens"))
+            .orderBy("source"))
 
 
-def _derive_never_certified(latest: dict[str, int]) -> tuple[str, ...]:
-    """Registry-ordered tuple of queries with no driver certification row
-    in any CORRECTNESS_r*.json artifact (nor the frozen r02 record).
-    ``latest`` is ``_latest_certification_rounds()`` output; an empty dict
-    means the artifacts were unreadable and the static fallback applies —
-    never guess 'everything is uncertified' off a filesystem hiccup."""
-    if not latest:
-        return _NEVER_CERTIFIED_FALLBACK
-    ever = set(latest) | set(_R02_CERTIFIED)
-    return tuple(n for n in REGISTRY if n not in ever)
-
-#: Queries whose code path changed since their last driver certification,
-#: as (query, round-the-change-SHIPPED) pairs. Round 10 (VERDICT r9 #4):
-#: the tier is SELF-EXPIRING — an entry is active only while the query's
-#: newest driver row predates its change round (see ``_active_changed``),
-#: so a landed certification vacates the slot at the next import instead
-#: of burning a window slot every round until someone remembers to delete
-#: it. Round 11 (VERDICT r10 wrong #1): the record is a TUPLE OF PAIRS,
-#: not a dict — a query changed in two different rounds keeps BOTH
-#: provenance entries (the r10 dict literal silently shadowed q173's r9
-#: row), and the newest round governs expiry. All r9/r10 entries below
-#: carry certification rows as new as their change round and are
-#: therefore inactive; they stay listed as the provenance record and as
-#: live proof the expiry works.
-_CHANGED_SINCE_CERTIFIED: tuple[tuple[str, int], ...] = (
-    ("q173_prefix_filtered_join", 9),
-    ("q174_keep_best_dedup", 9),
-    ("q154_bpe_merges", 9),
-    ("q164_bpe_fertility", 9),
-    ("q56_minhash_pairs", 9),
-    ("q64_neardup_corpus", 9),
-    # Round 10: the serial-scan fan-out family (the in-suite-inflation
-    # root fix — single-small-file corpora serialize expression-heavy
-    # scan pipelines; bm25_topk and both shingle operators now fan out
-    # conditionally; values oracle-identical at all three SFs, plans
-    # changed). q194/q208 consume the same paths but are never-certified
-    # and already lead/queue the window.
-    ("q150_bm25_retrieval", 10),
-    ("q151_hybrid_rrf_retrieval", 10),
-    ("q32_ngram_jaccard_topk", 10),
-    ("q152_leakage_safe_split", 10),
-    ("q168_containment_pairs", 10),
-    ("q183_dedup_threshold_curve", 10),
-    ("q173_prefix_filtered_join", 10),
-    # Round 11: relational.fan_out_small_scan applied inside
-    # text.bigram_lm_nll / the q196 builder (VERDICT r10 #4), whose
-    # consumers are the four queries below; values oracle-identical at
-    # all three SFs + bit-exact audit, plans changed.
-    ("q146_bigram_lm_nll", 11),
-    ("q157_domain_selection", 11),
-    ("q182_ccnet_buckets", 11),
-    ("q196_bigram_entropy", 11),
-    # Round 12: the bigram_lm_nll fan-out REVERTED after the A/B the r11
-    # change shipped without (VERDICT r11 #2; tools/bigram_fanout_ab.py:
-    # fan-out cost +14%/+47%/+27% on q146/q157/q182 in two independent
-    # interleaved min-of-3 sessions). q196's inline fan-out KEPT (close
-    # evidence 2.11→1.15 s, A/B neutral). Values unchanged by
-    # construction; plans changed for every bigram_lm_nll consumer.
-    ("q146_bigram_lm_nll", 12),
-    ("q157_domain_selection", 12),
-    ("q182_ccnet_buckets", 12),
-    ("q199_doremi_reweight", 12),
-    # Round 13: stream_upsert_latest gained restart-safe manifest
-    # persistence (ADVICE r12 closed in code: _manifest.json beside the
-    # state, epoch-offset namespace, load-time orphan sweep). Values
-    # unchanged by construction (keep-latest idempotence); the state
-    # lifecycle changed, so its one consumer re-certifies.
-    ("q202_stream_upsert_latest", 13),
-    # Round 14: manifest entries persist RELATIVE to state_dir (ADVICE
-    # r13 medium — absolute spellings made a respelled resume sweep
-    # committed state). Values unchanged by construction (keep-latest
-    # idempotence; same-run behavior identical); the persisted state
-    # format changed, so its one consumer re-certifies.
-    ("q202_stream_upsert_latest", 14),
-    # Round 14: q226's grid anchor casts to timestamp_ntz so the hour
-    # join key is homogeneous by TYPE (ADVICE r13 — previously
-    # value-equal only under the session's pinned UTC). Values
-    # unchanged; the join-key types in the plan changed.
-    ("q226_gapfill_hourly", 14),
+@_register(
+    "q255_t_closeness",
+    survey="net-new t-closeness privacy audit (per-QI-group EMD between the group's and the global ordered-sensitive-attribute distribution, Li et al. 2007 — completes the k-anonymity (q142) / l-diversity (q220) release-gate triptych; EMD over an ordered domain = sum of |cumulative differences|, exact after n_group x n_total cross-scaling)",
+    oracle="""
+        WITH b AS (
+          SELECT c_mktsegment, n_name,
+                 CAST(floor(c_acctbal / 1000) AS BIGINT) AS bal_kbucket
+          FROM customer JOIN nation ON c_nationkey = n_nationkey),
+        cells AS (
+          SELECT c_mktsegment, n_name, bal_kbucket, count(*) AS c_gb
+          FROM b GROUP BY 1, 2, 3),
+        grp AS (
+          SELECT c_mktsegment, n_name, count(*) AS n_g
+          FROM b GROUP BY 1, 2),
+        bk AS (
+          SELECT bal_kbucket, count(*) AS c_b FROM b GROUP BY 1),
+        bkc AS (
+          SELECT bal_kbucket, c_b,
+                 sum(c_b) OVER (ORDER BY bal_kbucket
+                                ROWS UNBOUNDED PRECEDING) AS cum_b
+          FROM bk),
+        tot AS (SELECT count(*) AS n,
+                       count(DISTINCT bal_kbucket) AS nb FROM b),
+        grid AS (
+          SELECT g.c_mktsegment, g.n_name, g.n_g,
+                 k.bal_kbucket, k.cum_b,
+                 coalesce(c.c_gb, 0) AS c_gb
+          FROM grp g CROSS JOIN bkc k
+          LEFT JOIN cells c
+            ON c.c_mktsegment = g.c_mktsegment
+           AND c.n_name = g.n_name AND c.bal_kbucket = k.bal_kbucket),
+        cg AS (
+          SELECT c_mktsegment, n_name, n_g, cum_b,
+                 sum(c_gb) OVER (PARTITION BY c_mktsegment, n_name
+                                 ORDER BY bal_kbucket
+                                 ROWS UNBOUNDED PRECEDING) AS cum_g
+          FROM grid)
+        SELECT cg.c_mktsegment, cg.n_name,
+               max(cg.n_g) AS n_rows,
+               CAST(sum(abs(tot.n * cg.cum_g - cg.n_g * cg.cum_b))
+                    AS DOUBLE)
+                 / (CAST(max(cg.n_g) AS DOUBLE) * CAST(tot.n AS DOUBLE)
+                    * CAST(tot.nb - 1 AS DOUBLE)) AS t_closeness
+        FROM cg, tot
+        GROUP BY cg.c_mktsegment, cg.n_name, tot.n, tot.nb
+        ORDER BY cg.c_mktsegment, cg.n_name
+    """,
 )
+def q255_t_closeness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """t-closeness (Li et al. 2007): for each quasi-identifier group
+    (segment, nation), the Earth Mover's Distance between the group's
+    and the global distribution of the ORDERED sensitive attribute
+    (the q142 acctbal k-bucket) — the release gate l-diversity misses
+    when a group's sensitive values are diverse but skewed. Over an
+    ordered domain EMD reduces to the sum of |cumulative differences|;
+    cross-scaling by n x n_g keeps every term an exact integer
+    (DECIMAL(38) Spark-side for 100 TB, BIGINT in the fixture-bounded
+    oracle), normalized once by n_g * n * (B-1) in a single IEEE
+    divide — bit-identical cross-engine, emitted UNROUNDED. Zero cells
+    are materialized via the group x bucket-domain grid (the q217
+    chi-square discipline). 100 TB: every relation after the first
+    aggregate is attribute-domain-bounded (groups x buckets); the
+    per-group window runs over ≤|bucket domain| rows."""
+    cat = Catalog(spark, sf_dir)
+    b = (cat.customer.join(
+            F.broadcast(cat.nation.select("n_nationkey", "n_name")),
+            F.col("c_nationkey") == F.col("n_nationkey"))
+         .select("c_mktsegment", "n_name",
+                 F.floor(F.col("c_acctbal") / 1000).alias("bal_kbucket")))
+    cells = b.groupBy("c_mktsegment", "n_name", "bal_kbucket").agg(
+        F.count(F.lit(1)).alias("c_gb"))
+    grp = b.groupBy("c_mktsegment", "n_name").agg(
+        F.count(F.lit(1)).alias("n_g"))
+    wb = (Window.orderBy("bal_kbucket")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    bkc = (b.groupBy("bal_kbucket").agg(F.count(F.lit(1)).alias("c_b"))
+           .withColumn("cum_b", F.sum("c_b").over(wb))
+           .drop("c_b"))
+    tot = b.agg(F.count(F.lit(1)).alias("_n"),
+                F.countDistinct("bal_kbucket").alias("_nb"))
+    grid = (grp.crossJoin(F.broadcast(bkc))
+            .join(cells, ["c_mktsegment", "n_name", "bal_kbucket"],
+                  "left")
+            .withColumn("c_gb", F.coalesce(F.col("c_gb"), F.lit(0))))
+    wg = (Window.partitionBy("c_mktsegment", "n_name")
+          .orderBy("bal_kbucket")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    cg = grid.withColumn("cum_g", F.sum("c_gb").over(wg))
+    term = F.abs(F.col("_n").cast("decimal(38,0)") * F.col("cum_g")
+                 - F.col("n_g").cast("decimal(38,0)") * F.col("cum_b"))
+    return (cg.crossJoin(F.broadcast(tot))
+            .groupBy("c_mktsegment", "n_name")
+            .agg(F.max("n_g").alias("n_rows"),
+                 (F.sum(term).cast("double")
+                  / (F.max("n_g").cast("double")
+                     * F.max("_n").cast("double")
+                     * (F.max("_nb") - 1).cast("double")))
+                 .alias("t_closeness"))
+            .orderBy("c_mktsegment", "n_name"))
 
 
-def _changed_rounds() -> dict[str, int]:
-    """query -> NEWEST round a change shipped in, first-appearance
-    ordered. The provenance tuple may carry several rounds for one
-    query; expiry compares against the newest."""
-    out: dict[str, int] = {}
-    for n, rnd in _CHANGED_SINCE_CERTIFIED:
-        out[n] = max(out.get(n, 0), rnd)
-    return out
+@_register(
+    "q254_gini_concentration",
+    survey="net-new Gini / Lorenz revenue concentration (customer lifetime revenue inequality from exact integer-cents rank-weighted sums via the adaptive global-ranks machinery — G = (2*S1 - (n+1)*S)/(n*S), ONE IEEE divide; complements q248's HHI share-of-squares with the rank-based concentration read)",
+    oracle="""
+        WITH r AS (
+          SELECT o_custkey,
+                 sum(CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100
+                          AS BIGINT)) AS rev_c
+          FROM orders GROUP BY 1),
+        rn AS (
+          SELECT rev_c,
+                 row_number() OVER (ORDER BY rev_c, o_custkey) AS i
+          FROM r),
+        nn AS (SELECT count(*) AS n FROM r),
+        m AS (
+          SELECT nn.n AS n, sum(rev_c) AS s, sum(i * rev_c) AS s1,
+                 sum(CASE WHEN 2 * i <= nn.n THEN rev_c
+                          ELSE 0 END) AS bh
+          FROM rn, nn GROUP BY nn.n)
+        SELECT CAST(n AS BIGINT) AS n_customers,
+               round(CAST(s AS DOUBLE) / 100, 2) AS total_revenue,
+               CAST(2 * s1 - (n + 1) * s AS DOUBLE)
+                 / (CAST(n AS DOUBLE) * CAST(s AS DOUBLE)) AS gini,
+               CAST(bh AS DOUBLE) / CAST(s AS DOUBLE)
+                 AS bottom_half_rev_share
+        FROM m
+    """,
+)
+def q254_gini_concentration(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Gini coefficient of customer lifetime revenue + the Lorenz
+    bottom-half share — the rank-based inequality read beside q248's
+    HHI. Revenue stays exact integer cents; the global ascending rank
+    comes from ``ranks.global_row_numbers`` (adaptive: plain window
+    under the size probe, range-partitioned above — the q101-certified
+    construction, so the customer-grain sort is never a single
+    partition at scale). With x sorted ascending and i = 1..n,
+    G = (2*sum(i*x_i) - (n+1)*sum(x)) / (n*sum(x)): numerator and
+    denominator are exact DECIMAL(38) (BIGINT in the fixture-bounded
+    oracle), the quotient ONE IEEE divide — bit-identical
+    cross-engine, emitted UNROUNDED. Rank ties cannot affect the sums
+    (equal x within a tie group makes sum(i*x) tie-order invariant),
+    but the (rev, custkey) order is total anyway. 100 TB: one
+    customer-grain aggregate, one distributed rank, one scalar moment
+    aggregate."""
+    from .operators.ranks import global_row_numbers
+    cat = Catalog(spark, sf_dir)
+    cents = F.expr(
+        "CAST(CAST(o_totalprice AS DECIMAL(18,2)) * 100 AS BIGINT)")
+    r = (cat.orders.select("o_custkey", cents.alias("c"))
+         .groupBy("o_custkey")
+         .agg(F.sum(F.col("c").cast("decimal(38,0)")).alias("rev_c")))
+    rn = global_row_numbers(
+        r, [F.col("rev_c").asc(), F.col("o_custkey").asc()], out_col="i")
+    nfr = r.agg(F.count(F.lit(1)).alias("_n"))
+    m = (rn.crossJoin(F.broadcast(nfr))
+         .agg(F.max("_n").alias("n"),
+              F.sum("rev_c").alias("s"),
+              F.sum(F.col("i").cast("decimal(38,0)") * F.col("rev_c"))
+              .alias("s1"),
+              F.sum(F.when(2 * F.col("i") <= F.col("_n"),
+                           F.col("rev_c")).otherwise(F.lit(0)))
+              .alias("bh")))
+    n_d = F.col("n").cast("double")
+    s_d = F.col("s").cast("double")
+    return m.select(
+        F.col("n").cast("bigint").alias("n_customers"),
+        F.round(s_d / 100, 2).alias("total_revenue"),
+        ((2 * F.col("s1") - (F.col("n") + 1).cast("decimal(38,0)")
+          * F.col("s")).cast("double") / (n_d * s_d)).alias("gini"),
+        (F.col("bh").cast("double") / s_d).alias("bottom_half_rev_share"))
 
 
-def _active_changed(latest: dict[str, int]) -> tuple[str, ...]:
-    """Changed-tier entries whose shipped change has NOT yet been
-    driver-certified: active iff the newest certification row predates
-    the newest round a change shipped in. An empty/unreadable ``latest``
-    keeps every entry active — when the artifacts can't be read, the
-    safe direction is to re-certify, never to silently expire."""
-    changed = _changed_rounds()
-    if not latest:
-        return tuple(changed)
-    return tuple(n for n, rnd in changed.items()
-                 if latest.get(n, 0) < rnd)
+@_register(
+    "q257_degree_assortativity",
+    survey="net-new graph degree audit + assortativity (degree-degree Pearson over interaction-graph edge endpoints from exact integer moment sums — the graph-health read beside q141's PageRank and q167's triangles; hub-hub vs hub-leaf wiring decides whether degree-keyed partitioning skews)",
+    oracle="""
+        WITH e AS (
+          SELECT DISTINCT o_custkey AS u, l_partkey AS i
+          FROM lineitem JOIN orders ON l_orderkey = o_orderkey),
+        du AS (SELECT u, count(*) AS d FROM e GROUP BY 1),
+        di AS (SELECT i, count(*) AS d FROM e GROUP BY 1),
+        ej AS (
+          SELECT du.d AS x, di.d AS y
+          FROM e JOIN du ON e.u = du.u JOIN di ON e.i = di.i),
+        m AS (
+          SELECT count(*) AS n, sum(x) AS sx, sum(y) AS sy,
+                 sum(x * x) AS sxx, sum(y * y) AS syy,
+                 sum(x * y) AS sxy, max(x) AS mx, max(y) AS my
+          FROM ej)
+        SELECT CAST(n AS BIGINT) AS n_edges,
+               CAST(n * sxy - sx * sy AS DOUBLE)
+                 / sqrt(CAST(n * sxx - sx * sx AS DOUBLE)
+                        * CAST(n * syy - sy * sy AS DOUBLE))
+                 AS assortativity,
+               CAST(mx AS BIGINT) AS max_user_degree,
+               CAST(my AS BIGINT) AS max_item_degree
+        FROM m
+    """,
+)
+def q257_degree_assortativity(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Degree assortativity of the customer-part interaction graph:
+    Pearson correlation between the user-side and item-side degrees
+    across edges — positive means hubs wire to hubs (degree-keyed
+    shuffles will skew together), negative means hub-leaf wiring (the
+    salting target is one side only). All five moment sums (n, Σx, Σy,
+    Σx², Σy², Σxy) accumulate as exact integers (DECIMAL(38) Spark /
+    HUGEINT oracle); the coefficient is the fixed IEEE tree
+    num/sqrt(a·b) over exact-valued casts — deterministic cross-engine
+    (each int→double cast, the product, the sqrt, and the divide are
+    all correctly rounded), emitted UNROUNDED. 100 TB: the edge
+    relation shuffles once per degree join (hash on u, then on i — AQE
+    handles the skewed-hub case this query measures); the moment
+    aggregate is map-side combined."""
+    cat = Catalog(spark, sf_dir)
+    e = (cat.lineitem.select("l_orderkey", "l_partkey")
+         .join(cat.orders.select("o_orderkey", "o_custkey"),
+               F.col("l_orderkey") == F.col("o_orderkey"))
+         .select(F.col("o_custkey").alias("u"),
+                 F.col("l_partkey").alias("i")).distinct())
+    du = e.groupBy("u").agg(F.count(F.lit(1)).alias("x"))
+    di = e.groupBy("i").agg(F.count(F.lit(1)).alias("y"))
+    ej = e.join(du, "u").join(di, "i")
+    dec = lambda c: F.col(c).cast("decimal(38,0)")  # noqa: E731
+    m = ej.agg(F.count(F.lit(1)).alias("n"),
+               F.sum(dec("x")).alias("sx"), F.sum(dec("y")).alias("sy"),
+               F.sum(dec("x") * dec("x")).alias("sxx"),
+               F.sum(dec("y") * dec("y")).alias("syy"),
+               F.sum(dec("x") * dec("y")).alias("sxy"),
+               F.max("x").alias("mx"), F.max("y").alias("my"))
+    n = dec("n")
+    num = (n * F.col("sxy") - F.col("sx") * F.col("sy")).cast("double")
+    va = (n * F.col("sxx") - F.col("sx") * F.col("sx")).cast("double")
+    vb = (n * F.col("syy") - F.col("sy") * F.col("sy")).cast("double")
+    return m.select(
+        F.col("n").cast("bigint").alias("n_edges"),
+        (num / F.sqrt(va * vb)).alias("assortativity"),
+        F.col("mx").cast("bigint").alias("max_user_degree"),
+        F.col("my").cast("bigint").alias("max_item_degree"))
+
+
+@_register(
+    "q258_cusum_changepoint",
+    survey="net-new CUSUM change-point localization (per event type over daily counts: argmax |prefix(n*x_i - S)| in n-scaled integers — the q252 exact-comparison discipline applied to drift LOCALIZATION, where q175's PSI and q225's slopes only measure drift magnitude; F8: fixture daily counts are Poisson-flat, so the read is honestly 'peak consistent with noise')",
+    oracle="""
+        WITH d AS (
+          SELECT event_type,
+                 strftime(CAST(ts AS DATE), '%Y-%m-%d') AS day,
+                 CAST(count(*) AS BIGINT) AS x
+          FROM events GROUP BY 1, 2),
+        s AS (
+          SELECT event_type, day, x,
+                 CAST(count(*) OVER (PARTITION BY event_type) AS BIGINT)
+                   AS n_days,
+                 sum(x) OVER (PARTITION BY event_type) AS tot
+          FROM d),
+        c AS (
+          SELECT event_type, day, n_days,
+                 sum(n_days * x - tot) OVER (
+                   PARTITION BY event_type ORDER BY day
+                   ROWS UNBOUNDED PRECEDING) AS cusum
+          FROM s),
+        r AS (
+          SELECT event_type, day, n_days, cusum,
+                 row_number() OVER (PARTITION BY event_type
+                                    ORDER BY abs(cusum) DESC, day ASC)
+                   AS rk
+          FROM c)
+        SELECT event_type, day AS change_day,
+               CAST(abs(cusum) AS DOUBLE) / CAST(n_days AS DOUBLE)
+                 AS cusum_peak,
+               n_days
+        FROM r WHERE rk = 1
+        ORDER BY event_type
+    """,
+)
+def q258_cusum_changepoint(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """CUSUM change-point localization per event type: the day k
+    maximizing |Σ_{i≤k}(x_i − x̄)| over the daily-count series — the
+    standard level-shift locator. Computed without ever forming x̄:
+    the prefix of n·x_i − S is exactly n·(P_k − k·x̄), so all
+    accumulation is integer (n-scaled, the q252 discipline) and the
+    single IEEE divide by n lands the classic CUSUM peak in count
+    units. Tiebreak: earliest day. Days emitted as yyyy-MM-dd STRINGS
+    (the q246 dtype-gate convention; ISO strings sort
+    chronologically). 100 TB: both windows run over the (type × day)
+    relation — horizon-bounded (the q244 exception class), never
+    event-grain; the daily-count aggregate beneath is map-side
+    combined."""
+    cat = Catalog(spark, sf_dir)
+    d = (cat.events.groupBy(
+            "event_type",
+            F.date_format(F.col("ts").cast("date"), "yyyy-MM-dd")
+            .alias("day"))
+         .agg(F.count(F.lit(1)).alias("x")))
+    wt = Window.partitionBy("event_type")
+    wc = (Window.partitionBy("event_type").orderBy("day")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    s = (d.withColumn("n_days", F.count(F.lit(1)).over(wt))
+         .withColumn("tot", F.sum("x").over(wt)))
+    c = s.withColumn(
+        "cusum",
+        F.sum(F.col("n_days") * F.col("x") - F.col("tot")).over(wc))
+    wr = Window.partitionBy("event_type").orderBy(
+        F.abs(F.col("cusum")).desc(), F.col("day").asc())
+    return (c.withColumn("rk", F.row_number().over(wr))
+            .filter(F.col("rk") == 1)
+            .select("event_type", F.col("day").alias("change_day"),
+                    (F.abs(F.col("cusum")).cast("double")
+                     / F.col("n_days").cast("double")).alias("cusum_peak"),
+                    "n_days")
+            .orderBy("event_type"))
+
+
+@_register(
+    "q259_ks_aa_test",
+    survey="net-new two-sample Kolmogorov-Smirnov statistic (purchase-vs-view event values — the distributional A/A twin of q247's proportion z-test, F8: value is type-independent by construction so the honest read is null-calibration; exact cross-multiplied integer ECDF gap n_v*CP(v) - n_p*CV(v) prefix-summed over the near-unique value domain via the adaptive ranks machinery)",
+    oracle="""
+        WITH ev AS (
+          SELECT event_type, value FROM events
+          WHERE event_type IN ('purchase', 'view')),
+        n AS (
+          SELECT sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+                   AS np,
+                 sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
+                   AS nv
+          FROM ev),
+        pv AS (
+          SELECT value,
+                 sum(CASE WHEN event_type = 'purchase' THEN 1 ELSE 0 END)
+                   AS pc,
+                 sum(CASE WHEN event_type = 'view' THEN 1 ELSE 0 END)
+                   AS vc
+          FROM ev GROUP BY value),
+        c AS (
+          SELECT value,
+                 sum(n.nv * pv.pc - n.np * pv.vc) OVER (
+                   ORDER BY value ROWS UNBOUNDED PRECEDING) AS gap
+          FROM pv, n),
+        d AS (SELECT max(abs(gap)) AS dmax FROM c),
+        at_v AS (
+          SELECT min(value) AS ks_at_value
+          FROM c, d WHERE abs(c.gap) = d.dmax)
+        SELECT CAST(n.np AS BIGINT) AS n_purchase,
+               CAST(n.nv AS BIGINT) AS n_view,
+               CAST(d.dmax AS DOUBLE)
+                 / (CAST(n.np AS DOUBLE) * CAST(n.nv AS DOUBLE)) AS ks_d,
+               at_v.ks_at_value
+        FROM n, d, at_v
+    """,
+)
+def q259_ks_aa_test(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Two-sample KS statistic between purchase and view event values —
+    framed as the distributional A/A companion to q247's proportion
+    z-test (F8: ``value`` is type-independent by construction, so a
+    large D here means the pipeline broke, not the data drifted).
+    Exact: per distinct value the scaled ECDF gap
+    n_v·CP(v) − n_p·CV(v) accumulates as the prefix sum of integer
+    per-value deltas (one ``ranks.global_prefix_sum`` over the value
+    order — adaptive: plain window under the size probe, the
+    range-partitioned construction above it, because the value domain
+    is NEAR-UNIQUE and therefore event-grain at 100 TB — exactly the
+    q251 wall class, handled by the same machinery). D = max|gap| with
+    the earliest attaining value, normalized by ONE IEEE divide by
+    n_p·n_v. Build-time note: the adaptive size probe is a bounded
+    metadata action (driver-metadata-probe class). 100 TB: per-value
+    counts are map-side combined; the argmax is a 1-row frame
+    semi-join, never a global order-by-|gap| window."""
+    from .operators.ranks import RANKS_SMALL_INPUT_MAX, global_prefix_sum
+    cat = Catalog(spark, sf_dir)
+    ev = (cat.events.filter(F.col("event_type").isin("purchase", "view"))
+          .select("event_type", "value"))
+    nfr = ev.agg(
+        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+        .alias("np"),
+        F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
+        .alias("nv"))
+    pv = ev.groupBy("value").agg(
+        F.sum(F.when(F.col("event_type") == "purchase", 1).otherwise(0))
+        .alias("pc"),
+        F.sum(F.when(F.col("event_type") == "view", 1).otherwise(0))
+        .alias("vc"))
+    delta = (pv.crossJoin(F.broadcast(nfr))
+             .select("value",
+                     (F.col("nv").cast("decimal(38,0)") * F.col("pc")
+                      - F.col("np").cast("decimal(38,0)") * F.col("vc"))
+                     .alias("delta")))
+    c = global_prefix_sum(delta, [F.col("value").asc()], "delta",
+                          out_col="gap",
+                          small_input_max=RANKS_SMALL_INPUT_MAX)
+    dfr = c.agg(F.max(F.abs(F.col("gap"))).alias("dmax"))
+    at_v = (c.join(F.broadcast(dfr),
+                   F.abs(F.col("gap")) == F.col("dmax"))
+            .agg(F.min("value").alias("ks_at_value")))
+    return (nfr.crossJoin(F.broadcast(dfr)).crossJoin(F.broadcast(at_v))
+            .select(F.col("np").cast("bigint").alias("n_purchase"),
+                    F.col("nv").cast("bigint").alias("n_view"),
+                    (F.col("dmax").cast("double")
+                     / (F.col("np").cast("double")
+                        * F.col("nv").cast("double"))).alias("ks_d"),
+                    "ks_at_value"))
+
+
+@_register(
+    "q260_knn_hubness",
+    survey="net-new kNN-graph hubness audit (in-degree histogram of the exact int8-quantized top-k graph over a deterministic probe subset — the hub-vector concentration diagnosis that motivates q190's margin criterion; bounded-probe contract, integer dot ranking, zero-degree mass included)",
+    oracle="""
+        WITH qz AS (
+          SELECT vec_id,
+                 CASE WHEN list_max(list_transform(embedding,
+                                                   x -> abs(x))) = 0
+                      THEN list_transform(embedding,
+                                          x -> CAST(0 AS BIGINT))
+                      ELSE list_transform(embedding, x -> CAST(floor(
+                           x::DOUBLE * 127.0 /
+                           list_max(list_transform(embedding,
+                                    y -> abs(y)))::DOUBLE)
+                           AS BIGINT)) END AS q
+          FROM embeddings),
+        scored AS (
+          SELECT a.vec_id AS query_id, b.vec_id AS neighbor_id,
+                 CAST(list_sum(list_transform(range(1, len(a.q) + 1),
+                      i -> a.q[i] * b.q[i])) AS BIGINT) AS qdot
+          FROM qz a JOIN qz b
+            ON a.vec_id % 16 = 0 AND b.vec_id <> a.vec_id),
+        ranked AS (
+          SELECT query_id, neighbor_id,
+                 row_number() OVER (PARTITION BY query_id
+                                    ORDER BY qdot DESC, neighbor_id ASC)
+                   AS rank
+          FROM scored),
+        indeg AS (
+          SELECT neighbor_id, CAST(count(*) AS BIGINT) AS in_degree
+          FROM ranked WHERE rank <= 5 GROUP BY 1),
+        hist AS (
+          SELECT in_degree, CAST(count(*) AS BIGINT) AS n_vectors
+          FROM indeg GROUP BY 1),
+        z AS (
+          SELECT CAST(0 AS BIGINT) AS in_degree,
+                 (SELECT count(*) FROM embeddings)
+                   - (SELECT count(*) FROM indeg) AS n_vectors)
+        SELECT in_degree, n_vectors FROM hist
+        UNION ALL SELECT in_degree, n_vectors FROM z
+        ORDER BY in_degree
+    """,
+)
+def q260_knn_hubness(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Hubness audit of the embedding space: how unevenly do vectors
+    appear in other vectors' top-k — the pathology (Radovanović et al.
+    2010) that q190's margin criterion exists to suppress. The exact
+    top-5 graph is built by ``similarity.quantized_topk`` (q117's
+    int8 integer-dot ranking — exact, deterministic, oracle-certified)
+    over the deterministic probe subset ``vec_id % 16 == 0`` (the
+    bounded-probe contract every ANN tier certifies under); in-degrees
+    roll into a histogram with the zero-degree mass included via one
+    scalar subtraction, so "share of the corpus never retrieved" reads
+    directly off the first row. 100 TB: probes broadcast, the corpus
+    scan never shuffles (per-query top-k prunes map-side via the
+    WindowGroupLimit partial), and the histogram is value-domain."""
+    from .operators import similarity as sim
+    cat = Catalog(spark, sf_dir)
+    emb = cat.embeddings
+    probes = emb.filter(F.col("vec_id") % 16 == 0)
+    topk = sim.quantized_topk(emb, probes, k=5)
+    indeg = (topk.groupBy("neighbor_id")
+             .agg(F.count(F.lit(1)).alias("in_degree")))
+    hist = (indeg.groupBy("in_degree")
+            .agg(F.count(F.lit(1)).alias("n_vectors")))
+    ntot = emb.agg(F.count(F.lit(1)).alias("_nt"))
+    napp = indeg.agg(F.count(F.lit(1)).alias("_na"))
+    zero = (ntot.crossJoin(napp)
+            .select(F.lit(0).cast("bigint").alias("in_degree"),
+                    (F.col("_nt") - F.col("_na")).alias("n_vectors")))
+    return hist.unionByName(zero).orderBy("in_degree")
+
+
+@_register(
+    "q261_cohort_ltv_curve",
+    survey="net-new weekly-cohort LTV accumulation curve (per first-purchase-week cohort: cumulative revenue per user by cohort age in weeks — the revenue-accumulation read q137's retention counts, q237's state transitions, and q242's latency quantiles all miss; exact integer-cents cumulative sums over the horizon-bounded (cohort x age) grid)",
+    oracle="""
+        WITH p AS (
+          SELECT user_id,
+                 (date_diff('day', DATE '2024-01-01', CAST(ts AS DATE))
+                  // 7) AS wk,
+                 CAST(CAST(value AS DECIMAL(18,2)) * 100 AS BIGINT) AS c
+          FROM events WHERE event_type = 'purchase'),
+        f AS (SELECT user_id, min(wk) AS cw FROM p GROUP BY 1),
+        cs AS (SELECT cw, CAST(count(*) AS BIGINT) AS n_users
+               FROM f GROUP BY 1),
+        a AS (
+          SELECT f.cw, p.wk - f.cw AS age, sum(p.c) AS rev_c
+          FROM p JOIN f ON p.user_id = f.user_id
+          GROUP BY 1, 2),
+        cum AS (
+          SELECT cw, age,
+                 sum(rev_c) OVER (PARTITION BY cw ORDER BY age
+                                  ROWS UNBOUNDED PRECEDING) AS cum_c
+          FROM a)
+        SELECT CAST(cum.cw AS BIGINT) AS cohort_week,
+               CAST(cum.age AS BIGINT) AS age_weeks,
+               cs.n_users,
+               round(CAST(cum.cum_c AS DOUBLE) / 100, 2) AS cum_revenue,
+               CAST(cum.cum_c AS DOUBLE)
+                 / (100.0 * CAST(cs.n_users AS DOUBLE)) AS ltv_per_user
+        FROM cum JOIN cs ON cum.cw = cs.cw
+        ORDER BY cohort_week, age_weeks
+    """,
+)
+def q261_cohort_ltv_curve(spark: SparkSession, sf_dir: str) -> DataFrame:
+    """Cohort LTV accumulation: users cohorted by FIRST-purchase
+    calendar week, revenue accumulated by cohort age — "how much has a
+    week-w signup cohort spent per head by age k", the curve whose
+    flattening point prices acquisition. Week indexes are integer day
+    arithmetic from the q241 epoch (never date_trunc — engine week
+    conventions differ); revenue accumulates as exact integer cents
+    (DECIMAL(18,2)·100); the cumulative window runs per cohort over
+    the AGE domain (horizon-bounded — the q244 exception class);
+    per-user LTV is the fixed tree cents/(100·n_users), two
+    correctly-rounded IEEE ops over exact operands, emitted UNROUNDED
+    beside the q254-convention rounded total. Ages with zero purchases
+    are simply absent (the cumulative is still correct at every
+    observed age; a reporting layer can forward-fill). 100 TB: one
+    row-grain first-purchase aggregate keyed by user, one
+    (cohort, age) aggregate — both map-side combined; everything after
+    is grid-sized."""
+    cat = Catalog(spark, sf_dir)
+    p = (cat.events.filter(F.col("event_type") == "purchase")
+         .select("user_id",
+                 F.floor(F.datediff(F.col("ts").cast("date"),
+                                    F.lit("2024-01-01").cast("date")) / 7)
+                 .alias("wk"),
+                 F.expr("CAST(CAST(value AS DECIMAL(18,2)) * 100"
+                        " AS BIGINT)").alias("c")))
+    f = p.groupBy("user_id").agg(F.min("wk").alias("cw"))
+    cs = f.groupBy("cw").agg(F.count(F.lit(1)).alias("n_users"))
+    a = (p.join(f, "user_id")
+         .groupBy("cw", (F.col("wk") - F.col("cw")).alias("age"))
+         .agg(F.sum(F.col("c").cast("decimal(38,0)")).alias("rev_c")))
+    wc = (Window.partitionBy("cw").orderBy("age")
+          .rowsBetween(Window.unboundedPreceding, Window.currentRow))
+    cum = a.withColumn("cum_c", F.sum("rev_c").over(wc))
+    return (cum.join(cs, "cw")
+            .select(F.col("cw").cast("bigint").alias("cohort_week"),
+                    F.col("age").cast("bigint").alias("age_weeks"),
+                    "n_users",
+                    F.round(F.col("cum_c").cast("double") / 100, 2)
+                    .alias("cum_revenue"),
+                    (F.col("cum_c").cast("double")
+                     / (F.lit(100.0) * F.col("n_users").cast("double")))
+                    .alias("ltv_per_user"))
+            .orderBy("cohort_week", "age_weeks"))
+
 
 #: Rows-only audit (VERDICT r9 #8): every registry query WITHOUT a DuckDB
 #: oracle carries a one-line proof that no SQL-expressible value invariant
 #: exists — i.e. the missing oracle is a property of the operator's
 #: semantics, not an evidence gap. Each is driver-executed clean and
 #: sha256-value-pinned (tests/test_snapshot_pins.py, 3-fresh-sessions
-#: protocol). `tests/test_registry_window.py` asserts this table is
+#: protocol). `tests/test_oracle_parity.py` asserts this table is
 #: EXACTLY the oracle-less registry subset, so a new rows-only query
 #: cannot ship without writing its proof line (or an oracle).
 _ROWS_ONLY_PROOFS: dict[str, str] = {
@@ -12111,172 +12555,3 @@ _ROWS_ONLY_PROOFS: dict[str, str] = {
         "operator. Init is hash-derived (deterministic); assignment "
         "invariants + pinned centroids carry the value evidence."),
 }
-
-#: Cross-round sanity anchor: one never-changed query certified every round.
-_ANCHOR = "q01_top_parts"
-
-#: Window full? Defer, don't evict (the r6 discipline, reintroduced for
-#: round 9): the 50-slot window is exactly consumed by the 12 round-9
-#: additions + the changed tier + the anchor + the 31 r5-vintage
-#: refreshes VERDICT r8 #2 ordered, so queries added AFTER that
-#: composition ship OUTSIDE the window this round — at the very end of
-#: the registry, never displacing a scheduled refresh — and auto-lead
-#: the next round's window through the never-certified tier the moment
-#: this round's artifact lands. Until then their evidence is the same
-#: gate the driver applies, run locally: tri-SF DuckDB oracle parity
-#: (tests/test_oracle_parity.py) + the strict driver replica
-#: (tools/driver_replica.py).
-_DEFERRED_TO_NEXT_WINDOW: tuple[str, ...] = (
-    "q243_benford_first_digit",
-    "q244_theil_sen_trend",
-    "q245_activity_streaks",
-    "q246_lead_time_sla",
-    "q247_aa_proportion_ztest",
-    "q248_supplier_hhi",
-    "q249_spearman_rank_corr",
-    "q250_join_key_skew_audit",
-    "q251_decile_lift",
-    "q252_centroid_confusion",
-)
-
-#: The deferral self-expires: it only applies while the newest
-#: CORRECTNESS artifact is from this round's predecessor (the window
-#: these queries must not disturb). The moment this round's artifact
-#: lands, maxRound advances past this constant, the deferral dissolves,
-#: and the never-certified tier pulls the deferred queries to the front
-#: of the NEXT window — no manual recomposition step to forget.
-#: Round 10: the r9 wave's deferral (q188–q198, deferred-as-of 8)
-#: dissolved when CORRECTNESS_r09 landed — those eleven now LEAD the
-#: r10 window via the never-certified tier; the round-10 additions
-#: (q199–q203, COVERAGE.md growth-policy rule 2) take their place at
-#: the registry end so the 38 scheduled r6-vintage refreshes
-#: (VERDICT r9 #2) keep their slots.
-#: Round 11: the r10 wave's deferral (q199–q208) dissolved on
-#: CORRECTNESS_r10 — those ten lead the r11 window; the round-11
-#: additions (q209–q218) defer in their place so the 15 scheduled
-#: r6-vintage refreshes (VERDICT r10 #3, q125–q139) keep their slots.
-#: Round 12: the r11 wave's deferral (q209–q219) dissolved on
-#: CORRECTNESS_r11 — those eleven lead the r12 window (with the four
-#: r12 changed-tier entries and the anchor: 16-slot front, 34 refresh
-#: slots for the 26 r7-vintage certificates VERDICT r11 #4 ordered);
-#: the round-12 additions (q220–q230) defer in their place.
-#: Round 13: the r12 wave's deferral (q220–q230) dissolved on
-#: CORRECTNESS_r12 — those eleven lead the r13 window (with the anchor:
-#: 12-slot front, 38 refresh slots absorbing the full 28-certificate
-#: r8-vintage tier VERDICT r12 #2 ordered plus ten r9 rows); the
-#: round-13 additions (q231–q242, the last unconstrained wave before
-#: the 245 ceiling) defer in their place.
-#: Round 14: the r13 wave's deferral (q231–q242) dissolved on
-#: CORRECTNESS_r13 — those twelve lead the r14 window (with the two
-#: r14 changed-tier entries q202/q226 and the anchor: 15-slot front,
-#: 35 refresh slots for the oldest r9-vintage certificates); the
-#: round-14 additions (q243–q252, sized WITH the first rule-3
-#: retirement batch so the registry lands at 243 ≤ 245) defer in
-#: their place.
-_DEFERRED_AS_OF_ROUND = 13
-
-
-def _active_deferrals(latest: dict[str, int]) -> set[str]:
-    """Deferred queries that must still sit OUTSIDE the window: the
-    deferral holds only while the newest artifact is from round
-    ``_DEFERRED_AS_OF_ROUND`` (the window composition being protected)
-    and the query itself is still uncertified. A newer artifact — or a
-    row certifying the query — dissolves it."""
-    if not latest or max(latest.values()) > _DEFERRED_AS_OF_ROUND:
-        return set()
-    return set(_DEFERRED_TO_NEXT_WINDOW) - set(latest)
-
-
-def _rotation_staleness_bound(n_front: int, n_queries: int,
-                              window: int = 50) -> int:
-    """Rounds a certificate may lag the newest artifact before the
-    rotation has GENUINELY fallen behind (vs. the registry simply being
-    larger than the window can sweep in the old constant's cadence).
-
-    Stalest-first refresh has ``window − n_front`` slots per round
-    (``n_front`` = the changed-since-certified tier + the anchor — the
-    steady-state front; the never-certified tier is transient and vacates
-    after one landing).  A full sweep of the registry therefore takes
-    ``ceil(n_queries / slots)`` rounds, and a certificate is legal until
-    its next scheduled slot — one sweep plus the round in which the
-    refreshing artifact lands.  At 185 queries / 50 slots / 7 steady
-    front this yields 6; the r7-era constant (2) assumed a 146-query
-    registry and became unsatisfiable as the registry grew, which is the
-    recurring post-close red-test class VERDICT r8 #1 ordered fixed."""
-    slots = max(window - n_front, 1)
-    return -(-n_queries // slots) + 1
-
-
-def _latest_certification_rounds(repo: str | None = None) -> dict[str, int]:
-    """query -> newest round whose CORRECTNESS_r*.json certified it, read
-    from the driver artifacts next to the package (or under ``repo`` when
-    given — tests point this at a tmpdir to simulate future artifacts).
-    Best-effort: missing or unreadable artifacts yield {} and the caller
-    falls back to static ordering (never let window composition break
-    query registration)."""
-    import glob
-    import json
-    import os
-    import re
-
-    latest: dict[str, int] = {}
-    if repo is None:
-        repo = os.path.dirname(os.path.dirname(os.path.abspath(__file__)))
-    try:
-        for path in glob.glob(os.path.join(repo, "CORRECTNESS_r*.json")):
-            m = re.search(r"CORRECTNESS_r(\d+)\.json$", path)
-            if not m:
-                continue
-            rnd = int(m.group(1))
-            with open(path) as fh:
-                for name in json.load(fh):
-                    latest[name] = max(latest.get(name, 0), rnd)
-    except Exception:
-        return {}
-    return latest
-
-
-def _reorder_for_certification_window() -> None:
-    """Front: never-certified, then changed-since-certified, then the
-    anchor. Middle: stalest certificates first — everything else ordered
-    by its NEWEST driver-certification round ascending (read from the
-    CORRECTNESS_r*.json artifacts; registration order is the tiebreak and
-    the fallback when artifacts are unavailable). The driver reads the
-    first 50, so refresh slots always go to the oldest certificates —
-    round 7's 40 free slots absorb the full r3-vintage tier (VERDICT r6
-    #4) with room left for the oldest r4 rows."""
-    global REGISTRY, _NEVER_CERTIFIED
-    latest = _latest_certification_rounds()
-    _NEVER_CERTIFIED = _derive_never_certified(latest)
-    deferred = _active_deferrals(latest)
-    front = [n for n in _NEVER_CERTIFIED
-             if n in REGISTRY and n not in deferred]
-    front += [n for n in _active_changed(latest)
-              if n in REGISTRY and n not in front]
-    front.append(_ANCHOR)
-    seen = set(front)
-    reg_pos = {n: i for i, n in enumerate(REGISTRY)}
-    # Still-uncertified deferred queries sort to the very end: they must
-    # never displace a scheduled staleness refresh. Once an artifact
-    # certifies them (or the next round's import finds them uncertified
-    # with window room), the never-certified tier pulls them forward.
-    rest = sorted((n for n in REGISTRY if n not in seen),
-                  key=lambda n: (n in deferred, latest.get(n, 2),
-                                 reg_pos[n]))
-    ordered = front + rest
-    assert sorted(ordered) == sorted(REGISTRY), "registry reorder lost entries"
-    # Reorder IN PLACE: modules bind REGISTRY by ``from queries import
-    # REGISTRY`` at import, so rebinding the global to a fresh dict
-    # would strand every such alias on a stale object the moment a
-    # mid-session reorder runs (the retirement dry-run does exactly
-    # that) — order-sensitive only by test file order, i.e. a trap.
-    snapshot = {n: REGISTRY[n] for n in ordered}
-    REGISTRY.clear()
-    REGISTRY.update(snapshot)
-
-
-#: Artifact-derived at import by ``_reorder_for_certification_window``;
-#: this assignment is only the pre-derivation default.
-_NEVER_CERTIFIED: tuple[str, ...] = _NEVER_CERTIFIED_FALLBACK
-
-_reorder_for_certification_window()

@@ -1,7 +1,8 @@
-"""Semantic invariants for the STAGED r15 wave — full hand-recomputation
-in plain Python (the test_wave14_semantics model, strongest evidence
-form): every staged query's result is rebuilt from independently loaded
-fixture rows with exact ``==`` assertions. The oracle parity suite can
+"""Semantic invariants for the audit-statistics queries (q253-q261) —
+full hand-recomputation in plain Python (the
+test_robust_stats_experiments model, strongest evidence form): every
+query's result is rebuilt from independently loaded fixture rows with
+exact ``==`` assertions. The oracle parity suite can
 miss a mistake both engines share (verify-skill lessons 15/18); these
 cannot — the recomputation shares no code with the builder OR the
 oracle. No-tolerance equality is correct because every engine float is
@@ -15,13 +16,13 @@ import re
 from collections import defaultdict
 from decimal import ROUND_HALF_UP, Decimal
 
-from ds_ga1004_bigdata_project_spark.staged import STAGED
+from ds_ga1004_bigdata_project_spark.queries import REGISTRY
 
 from .conftest import SF_ORACLE
 
 
 def _rows(spark, name):
-    return STAGED[name].build(spark, SF_ORACLE).collect()
+    return REGISTRY[name].build(spark, SF_ORACLE).collect()
 
 
 def _pq(spark, table):

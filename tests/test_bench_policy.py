@@ -6,6 +6,7 @@ BASELINE.md row, not a tweak."""
 from __future__ import annotations
 
 import importlib.util
+import json
 import os
 
 _spec = importlib.util.spec_from_file_location(
@@ -60,3 +61,23 @@ def test_box_controls_unreadable_on_missing_or_failed_control():
     assert bench.box_controls({"q01_top_parts": -1.0,
                                "q06_join_chain_revenue": 1.9}
                               )["box_index"] == -1.0
+
+
+def test_stdout_last_line_is_the_payload(monkeypatch, tmp_path, capsys):
+    """Stdout contract: a summary line, then the full JSON payload as the
+    LAST line. The summary carries none of the payload keys, so a parser
+    that takes the first JSON object on stdout fails loudly."""
+    times = {"q01_top_parts": 0.9, "q06_join_chain_revenue": 1.8,
+             "q99_data_quality_report": 2.0}
+    monkeypatch.setattr(bench, "run_suite", lambda sf_dir, cpus: dict(times))
+    monkeypatch.setattr(bench.sys, "argv", ["bench.py"])
+    monkeypatch.setenv("SPARK_GRAFT_BENCH_OUT", str(tmp_path / "bench.json"))
+    bench.main()
+    lines = capsys.readouterr().out.strip().splitlines()
+    assert len(lines) == 2
+    summary, payload = (json.loads(ln) for ln in lines)
+    assert payload["metric"] == "engine_query_suite_seconds"
+    assert payload["value"] == 4.7
+    assert payload["queries"] == times
+    assert not {"metric", "value", "queries"} & set(summary)
+

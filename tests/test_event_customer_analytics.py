@@ -1,6 +1,6 @@
-"""Semantic invariants for the r13 wave — checks the oracle CANNOT
-express (an oracle twin replicating the same mistake passes parity;
-these pin the meaning): growth-accounting conservation laws, EWMA
+"""Semantic invariants for the event/customer analytics queries
+(q231-q242) — checks the oracle CANNOT express (an oracle twin
+replicating the same mistake passes parity; these pin the meaning): growth-accounting conservation laws, EWMA
 hand-recomputation, quartile monotonicity, cross-query audit
 consistency, and metric range bounds."""
 

@@ -32,6 +32,7 @@ FAMILIES: dict[str, tuple[tuple[str, ...], str | None, str | None]] = {
     "join-variants": ((
         "q04_semi_join", "q05_anti_join", "q07_full_outer_counts",
         "q42_range_join", "q48_merge_upsert", "q49_asof_join",
+        "q68_exists_counts", "q69_above_brand_avg",
         "q88_cross_join", "q119_salted_join",
         "q130_correlated_subquery", "q139_point_in_time_join"),
         "text-quality funnel + exact dedup", None),  # stage 2's semi-join
@@ -393,7 +394,8 @@ FAMILIES: dict[str, tuple[tuple[str, ...], str | None, str | None]] = {
         "q08_distinct_flags", "q09_count_distinct", "q10_sorted_collect_list",
         "q12_quantity_histogram", "q26_map_aggregation", "q43_grouping_sets",
         "q47_pivot", "q65_unpivot", "q66_rollup_totals",
-        "q71_group_percentiles",
+        "q70_stats_suite", "q71_group_percentiles", "q77_distinct_aggs",
+        "q79_bool_bit_aggs",
         "q78_string_agg_regions", "q94_zscore_groups",
         "q99_data_quality_report", "q121_approx_percentiles"),
         None,
@@ -403,14 +405,25 @@ FAMILIES: dict[str, tuple[tuple[str, ...], str | None, str | None]] = {
     "scalar-exprs": ((
         "q19_scalar_string_funcs", "q20_null_sentinel",
         "q25_nested_projection", "q46_json_extract", "q75_string_suite",
-        "q89_json_typed"),
+        "q76_date_math", "q89_json_typed"),
         None,
         "pure expression surface (string/date/json/null scalars) riding "
         "every tour stage's projections; no standalone stage to tell"),
     "set-ops": ((
-        "q16_union_distinct_keys", "q17_except_keys", "q18_intersect_keys"),
+        "q16_union_distinct_keys", "q17_except_keys", "q18_intersect_keys",
+        "q86_multiset_ops"),
         None,
         "one-call DataFrame set algebra (union/except/intersect)"),
+    "audit-statistics": ((
+        "q253_relational_division", "q254_gini_concentration",
+        "q255_t_closeness", "q256_weighted_quantiles",
+        "q257_degree_assortativity", "q258_cusum_changepoint",
+        "q259_ks_aa_test", "q260_knn_hubness", "q261_cohort_ltv_curve"),
+        None,
+        "single-table audit statistics (division, concentration, "
+        "distribution shift, change points, cohort value) that print one "
+        "small table each; every one is oracle-checked and hand-recomputed "
+        "in tests/test_audit_statistics.py"),
     "token-stats": ((
         "q23_token_explode_count", "q35_token_stats", "q82_doc_repetition",
         "q84_bigram_counts", "q90_tfidf_top_terms", "q91_vocab_stats"),

@@ -184,6 +184,27 @@ WHITELIST: dict[str, tuple[dict[str, int], dict[str, str]]] = {
     "q251_decile_lift": ({"nested_loop": 5, "single_partition": 6},
                          {"single_partition": ADAPTIVE + " + " + SCALAR,
                           "nested_loop": SCALAR_FRAME}),
+    "q253_relational_division": ({"nested_loop": 1, "single_partition": 1},
+                                 {"single_partition": SCALAR
+                                  + " (priority-domain count)",
+                                  "nested_loop": SCALAR_FRAME}),
+    "q254_gini_concentration": ({"nested_loop": 1, "single_partition": 2},
+                                {"single_partition": ADAPTIVE + " + " + SCALAR,
+                                 "nested_loop": SCALAR_FRAME}),
+    "q255_t_closeness": ({"nested_loop": 2, "single_partition": 2},
+                         {"single_partition": VALUE_DOMAIN
+                          + " (balance-bucket domain) + " + SCALAR,
+                          "nested_loop": SCALAR_FRAME + " + " + VALUE_DOMAIN
+                          + " (QI-group x bucket grid)"}),
+    "q257_degree_assortativity": ({"single_partition": 1},
+                                  {"single_partition": SCALAR}),
+    "q259_ks_aa_test": ({"nested_loop": 5, "single_partition": 7},
+                        {"single_partition": ADAPTIVE + " + " + SCALAR,
+                         "nested_loop": SCALAR_FRAME}),
+    "q260_knn_hubness": ({"nested_loop": 3, "single_partition": 2},
+                         {"single_partition": SCALAR,
+                          "nested_loop": BOUNDED_PROBE
+                          + " (vec_id % 16 probe set) + " + SCALAR_FRAME}),
     "q27_rmse_native": ({"single_partition": 1},
                         {"single_partition": SCALAR}),
     "q40_ann_cosine_topk": ({"nested_loop": 1},

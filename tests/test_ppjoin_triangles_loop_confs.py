@@ -1,4 +1,5 @@
-"""Focused tests for the round-14 optimization changes.
+"""Equivalence and plan-shape tests for the PPJoin prunes, the triangle
+closure and the subword loop's session-conf scoping.
 
 Each optimization that changed an operator's internals gets a test pinning
 the property the change relies on: exact-equality of outputs against the

@@ -1,6 +1,6 @@
-"""Semantic invariants for the r14 wave — checks the oracle CANNOT
-express (an oracle twin replicating the same mistake passes parity;
-these pin the meaning): Benford share algebra, Theil-Sen / z-test /
+"""Semantic invariants for the robust-statistics and experimentation
+queries (q243-q252) — checks the oracle CANNOT express (an oracle twin
+replicating the same mistake passes parity; these pin the meaning): Benford share algebra, Theil-Sen / z-test /
 lift / confusion hand-recomputation (exact == where the engine emits
 fixed IEEE trees over exact operands), conservation laws, and range
 bounds."""

@@ -1,4 +1,5 @@
-"""Semantic unit tests for the round-9 deferred wave (q188-q193).
+"""Semantic unit tests for the repetition, WordPiece, padding, MMR, margin
+and kNN-eval operators (q188-q193).
 
 The cross-engine oracles certify arithmetic parity; these pin the
 SEMANTICS a twin can't catch if both engines replicated the same

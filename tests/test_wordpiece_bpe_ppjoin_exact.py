@@ -1,6 +1,6 @@
-"""Focused tests for the round-15 optimization changes.
+"""Exactness tests for the WordPiece/BPE learners and the PPJoin prunes.
 
-Every r15 change that touches an operator's internals gets a test pinning
+Every change that touches an operator's internals gets a test pinning
 the invariant the optimization relies on: byte-identical WordPiece merge
 tables under the fused per-iteration aggregation, BPE merge tables under
 lazy fold checkpoints, and exact-floor integer arithmetic in the PPJoin

@@ -203,12 +203,7 @@ def main() -> None:
 
     from ds_ga1004_bigdata_project_spark.queries import REGISTRY
     from ds_ga1004_bigdata_project_spark.session import get_local_session
-    from ds_ga1004_bigdata_project_spark.staged import STAGED
 
-    # staged (pre-registration) queries stress exactly like registered
-    # ones — the 10x row is part of the staging evidence, not a
-    # registration afterthought (the q238 wall was caught this way).
-    REGISTRY = {**REGISTRY, **STAGED}
     names = _resolve(args.query, REGISTRY)
     spark = get_local_session(app_name="stress")
     spark.sparkContext.setLogLevel("ERROR")
