@@ -18,6 +18,7 @@ from contextlib import contextmanager
 from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
+from ..session import local_frame
 from .text import ws_tokens
 
 
@@ -182,7 +183,7 @@ def bpe_learn(df: DataFrame, n_merges: int = 24, text_col: str = "text",
 
     schema = ("merge_rank int, left string, right string, merged string, "
               "pair_count bigint")
-    mdf = spark.createDataFrame(merges, schema)
+    mdf = local_frame(spark, merges, schema)
     return (mdf, vocab) if return_vocab else mdf
 
 
@@ -438,7 +439,7 @@ def wordpiece_learn(df: DataFrame, n_merges: int = 16,
     schema = ("merge_rank int, left string, right string, merged string, "
               "pair_count bigint, left_count bigint, right_count bigint, "
               "score double")
-    return spark.createDataFrame(merges, schema)
+    return local_frame(spark, merges, schema)
 
 
 def wordpiece_learn_sql(n_merges: int = 16, min_pair_count: int = 2,

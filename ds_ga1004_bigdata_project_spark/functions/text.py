@@ -14,6 +14,8 @@ from __future__ import annotations
 from pyspark.sql import Column, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 #: Tiny per-language stopword lexicons for the n-gram/stopword-hit heuristic
 #: language-ID. Deliberately small: the point is the operator shape (vector of
 #: per-language scores → argmax with deterministic tie-break), not the lexicon.
@@ -544,8 +546,8 @@ def bm25_topk(df, queries, k: int = 10, k1: float = 1.2, b: float = 0.75,
 
     if isinstance(queries, (list, tuple)):
         qrows = [(int(qid), qtext) for qid, qtext in queries]
-        qdf = df.sparkSession.createDataFrame(
-            qrows, "query_id int, qtext string")
+        qdf = local_frame(df.sparkSession, qrows,
+                          "query_id int, qtext string")
     else:
         qdf = queries.select("query_id", "qtext")
     qterms = (qdf.select("query_id",

@@ -24,6 +24,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..operators.relational import persisted
+from ..session import local_frame
 
 
 def interactions_from_orders(lineitem: DataFrame, orders: DataFrame) -> DataFrame:
@@ -157,4 +158,4 @@ def sweep_results_df(spark, results) -> DataFrame:
     rows = [(cfg.rank, cfg.reg_param, cfg.alpha, m["map"],
              m["precision_at_k"], m["ndcg_at_k"], m["n_users"])
             for cfg, m in results]
-    return spark.createDataFrame(rows, SWEEP_RESULTS_SCHEMA)
+    return local_frame(spark, rows, SWEEP_RESULTS_SCHEMA)

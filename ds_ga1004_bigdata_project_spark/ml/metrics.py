@@ -23,6 +23,8 @@ from __future__ import annotations
 from pyspark.sql import DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def rmse(df: DataFrame, label_col: str, pred_col: str) -> DataFrame:
     """RMSE as a native aggregate (A9; replaces RegressionEvaluator —
@@ -207,8 +209,8 @@ def auc(df: DataFrame, score_col: str, label_col: str,
             / (n_pos * n_neg)
     else:
         auc_val = None
-    out = df.sparkSession.createDataFrame(
-        [(auc_val, n_pos, n_neg)], "auc double, n_pos bigint, n_neg bigint")
+    out = local_frame(df.sparkSession, [(auc_val, n_pos, n_neg)],
+                      "auc double, n_pos bigint, n_neg bigint")
     if round_scale is not None:
         out = out.select(F.round("auc", round_scale).alias("auc"),
                          "n_pos", "n_neg")

@@ -23,6 +23,7 @@ from pyspark.sql import DataFrame
 from pyspark.sql import functions as F
 
 from ..functions.text import content_fingerprint, word_shingles, ws_tokens
+from ..session import local_frame
 
 
 def exact_dedup(df: DataFrame, text_col: str = "text", id_col: str = "doc_id",
@@ -484,8 +485,8 @@ def resolve_keep_list(ids: DataFrame, pairs: DataFrame,
             comp_min[root] = min(comp_min.get(root, node), node)
         mapping = [(node, comp_min[find(node)]) for node in members]
         id_t = ids.schema["id"].dataType.simpleString()
-        keep_df = ids.sparkSession.createDataFrame(
-            mapping, schema=f"id {id_t}, keep_id {id_t}")
+        keep_df = local_frame(ids.sparkSession, mapping,
+                              f"id {id_t}, keep_id {id_t}")
         return (ids.join(F.broadcast(keep_df), "id", "left")
                 .select(F.col("id"),
                         F.coalesce(F.col("keep_id"), F.col("id"))
@@ -1570,8 +1571,8 @@ def jaccard_threshold_curve(df: DataFrame,
         from .relational import persisted
         pairs = persisted(pairs)
         caches.append(pairs)
-    thr = spark.createDataFrame(
-        [(float(t),) for t in sorted(thresholds)], "threshold double")
+    thr = local_frame(spark, [(float(t),) for t in sorted(thresholds)],
+                      "threshold double")
     # STREAM the pair relation against the broadcast |thresholds|-row
     # table (crossJoin + filter -> BroadcastNestedLoopJoin with the
     # TINY side broadcast). The tempting `thr LEFT JOIN pairs ON

@@ -22,6 +22,8 @@ from __future__ import annotations
 from pyspark.sql import Column, DataFrame, Window
 from pyspark.sql import functions as F
 
+from ..session import local_frame
+
 
 def dot(a: Column, b: Column) -> Column:
     """Σ aᵢ·bᵢ in double precision, sequential fold (deterministic)."""
@@ -401,7 +403,7 @@ def ivf_topk(corpus: DataFrame, queries: DataFrame, k: int = 5,
     # Broadcast centroids to the query side, pick n_probe nearest cells each.
     centroids = [(i, [float(x) for x in c]) for i, c in enumerate(model.clusterCenters())]
     spark = corpus.sparkSession
-    cent_df = spark.createDataFrame(centroids, "cell int, c_vec array<double>")
+    cent_df = local_frame(spark, centroids, "cell int, c_vec array<double>")
     q = with_norm(queries.select(F.col(id_col).alias("query_id"),
                                  F.col(vec_col).alias("q_vec")), "q_vec", "q_norm")
     qc = (
@@ -761,8 +763,8 @@ def mmr_select(df: DataFrame, k: int = 10, lam: float = 0.7,
                                         cosine(F.col("v"), lit_p, 4)))
                  .localCheckpoint())
     spark = df.sparkSession
-    return spark.createDataFrame(
-        picks,
+    return local_frame(
+        spark, picks,
         "pick_rank int, vec_id bigint, relevance double, mmr_score double")
 
 

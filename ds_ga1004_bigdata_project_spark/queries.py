@@ -3705,8 +3705,9 @@ def q126_kmeans_assign(spark: SparkSession, sf_dir: str) -> DataFrame:
 def q127_kmeans_lloyd(spark: SparkSession, sf_dir: str) -> DataFrame:
     """Three full Lloyd rounds (assign → per-(cid,dim) mean → reassign) from
     the deterministic lowest-id seed — per-iteration cost is one corpus scan
-    plus a k·dim-sized partial-agg shuffle. Rows-only BY DESIGN: iterated
-    centroid means are unordered double summations (partition-order
+    plus one collected k·dim aggregate, with the centroids held on the
+    driver, so the final plan scans the corpus once. Rows-only BY DESIGN:
+    iterated centroid means are unordered double summations (partition-order
     dependent in any engine), so a SQL twin would hash-diverge in the last
     bit; the value contract is the sf0.001 snapshot pin in
     tests/test_kmeans.py instead. Output is the per-cluster size and mean
@@ -12552,6 +12553,7 @@ _ROWS_ONLY_PROOFS: dict[str, str] = {
         "Lloyd centroid means are IEEE sums whose order Spark's "
         "partitioning controls — replaying in SQL would need "
         "per-iteration rounding, i.e. a semantics change to the "
-        "operator. Init is hash-derived (deterministic); assignment "
-        "invariants + pinned centroids carry the value evidence."),
+        "operator. Init is the k lowest-id vectors (deterministic); "
+        "assignment invariants + tests/test_kmeans.py::_Q127_PIN "
+        "(per-cluster size and mean d2) carry the value evidence."),
 }

@@ -3,8 +3,9 @@
 The reference left its tuning commented out (``sample_indexer.py:55-63``:
 shuffle.partitions=40, Kryo, executor sizing). Here the session is tuned for
 real: AQE owns runtime re-planning (partition coalescing, skew-join splitting,
-dynamic broadcast), Arrow handles any driver hand-off, and shuffle partitions
-default to a cluster-friendly value that AQE coalesces downward on small data.
+dynamic broadcast), Arrow handles any driver hand-off (``local_frame`` for
+driver-held rows), and shuffle partitions default to a cluster-friendly value
+that AQE coalesces downward on small data.
 
 At 100 TB the knobs that matter are set here once: ``maxPartitionBytes`` keeps
 scan tasks ~128 MB, AQE advisory size keeps post-shuffle partitions ~64 MB, and
@@ -14,8 +15,10 @@ skew-join splitting handles hot keys without manual salting in the common case.
 from __future__ import annotations
 
 import os
+from collections.abc import Iterable
 
-from pyspark.sql import SparkSession
+from pyspark.sql import DataFrame, SparkSession
+from pyspark.sql.types import StructType
 
 _DEFAULTS = {
     # Adaptive execution: runtime partition coalescing, skew-join splitting,
@@ -108,3 +111,28 @@ def get_local_session(cpus: int | None = None, driver_mem: str | None = None,
     conf.update(kw.pop("extra_conf", {}) or {})
     return get_session(master=f"local[{n}]", shuffle_partitions=min(n, 32),
                        extra_conf=conf, **kw)
+
+
+def local_frame(spark: SparkSession, rows: Iterable[tuple],
+                ddl: str) -> DataFrame:
+    """Driver-held rows as a relation: the engine's one driver-to-JVM path.
+
+    The rows become one Arrow table (column-wise, typed by ``ddl``) that
+    the JVM decodes into a ``LocalRelation`` — a ``LocalTableScan`` in the
+    plan, planned and broadcast like any literal table. ``createDataFrame``
+    over a Python list instead pickles the rows into an RDD
+    (``Scan ExistingRDD``), and every job that reads it starts Python
+    workers to unpickle them again. The schema is exactly ``ddl``; empty
+    and ``None``-valued rows are fine. Spark keeps relations above
+    ``spark.sql.execution.arrow.localRelationThreshold`` as JVM-side Arrow
+    batches, still without Python workers."""
+    import pyarrow as pa
+    from pyspark.sql.pandas.types import to_arrow_schema
+
+    schema = StructType.fromDDL(ddl)
+    arrow_schema = to_arrow_schema(schema)
+    columns = list(zip(*rows)) or [()] * len(arrow_schema)
+    table = pa.Table.from_arrays(
+        [pa.array(c, type=f.type) for c, f in zip(columns, arrow_schema)],
+        schema=arrow_schema)
+    return spark.createDataFrame(table, schema)

@@ -17,6 +17,8 @@ import os
 from pyspark.sql import DataFrame, SparkSession
 from pyspark.sql.types import StructType
 
+from ..session import local_frame
+
 #: The driver-supplied star schema (TESTDATA.md) — one parquet file per table.
 TABLES = (
     "region",
@@ -458,12 +460,9 @@ def incremental_file_batch(spark: SparkSession, data_dir: str,
     millions of rows never collects — only the day's NEW file names do
     (bounded by batch size). The selected files are read directly, so the
     scan touches none of the already-processed bytes."""
-    from pyspark.sql import functions as F
-
-    listing = spark.createDataFrame(
-        [(f.name, f.size) for f in _list_files(spark, data_dir)]
-        or [("", 0)],
-        "file_name string, file_size long").filter(F.col("file_name") != "")
+    listing = local_frame(
+        spark, [(f.name, f.size) for f in _list_files(spark, data_dir)],
+        "file_name string, file_size long")
     if manifest is not None:
         keys = (["file_name", "file_size"]
                 if "file_size" in manifest.columns else ["file_name"])

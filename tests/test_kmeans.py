@@ -44,14 +44,12 @@ def test_update_centroids_is_elementwise_mean(spark):
     assigned = spark.createDataFrame(
         [(0, [0.0, 2.0]), (0, [2.0, 0.0]), (1, [4.0, 4.0])],
         "cid long, embedding array<double>")
-    got = {r["cid"]: r["cvec"]
-           for r in kmeans.update_centroids(assigned).collect()}
-    assert got == {0: [1.0, 1.0], 1: [4.0, 4.0]}
+    assert kmeans.update_centroids(assigned) == \
+        [(0, [1.0, 1.0]), (1, [4.0, 4.0])]
 
 
 def test_seed_centroids_are_lowest_ids(spark):
-    rows = kmeans.seed_centroids(_toy(spark), k=2).collect()
-    assert sorted((r["cid"], r["cvec"]) for r in rows) == \
+    assert kmeans.seed_centroids(_toy(spark), k=2) == \
         [(0, [0.0, 0.0]), (1, [0.1, 0.0])]
 
 
@@ -95,3 +93,17 @@ def test_lloyd_cluster_count(spark, k):
     emb = Catalog(spark, SF_SMOKE).embeddings.select("vec_id", "embedding")
     out = kmeans.lloyd(emb, k=k, n_iter=1)
     assert out.select("cid").distinct().count() == k
+
+
+def test_lloyd_plan_scans_its_input_once(spark):
+    """The centroids of every earlier iteration live on the driver and
+    enter the final plan as a one-row local relation, so the returned
+    assignment reads the corpus once — not once per iteration plus the
+    seed, as a plan nesting the whole iteration chain would."""
+    from ds_ga1004_bigdata_project_spark.sources.catalog import Catalog
+
+    emb = Catalog(spark, SF_SMOKE).embeddings.select("vec_id", "embedding")
+    plan = (kmeans.lloyd(emb, k=8, n_iter=3)
+            ._jdf.queryExecution().executedPlan().toString())
+    assert plan.count("FileScan parquet") == 1
+    assert "LocalTableScan" in plan
